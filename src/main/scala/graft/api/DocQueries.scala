@@ -48,8 +48,9 @@ object DocQueries {
           concat(lit("t"), (floor($"cx" / 64.0) * 100 + floor($"cy" / 64.0)).cast("long").cast("string")))
         .select($"doc_id", $"span_idx", $"tile_id")
         // job-scoped materialization: the span-extraction pipeline above
-        // otherwise recomputes for every pass runResumable makes over the
-        // input (tile census + data write) times the two runs below
+        // otherwise recomputes for each runResumable pass over the input —
+        // the data write of the first run (a fresh table takes no census)
+        // and the tile census of the second
         .localCheckpoint(true)
       val tableDir = java.nio.file.Files.createTempDirectory("graft_q18").toString
       TileLineage.runResumable(s, tiled, tableDir)

@@ -1,11 +1,13 @@
 package graft
 
+import org.apache.spark.JobCounter
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import org.apache.spark.sql.functions._
 
 import graft.lineage.TileLineage
+import graft.lineage.TileLineage.RunStats
 
 /** Resumability contract (north rule): a killed run resumes without
   * recomputing completed tiles; the lineage log is the commit record. */
@@ -103,5 +105,54 @@ class LineageSpec extends AnyFunSuite with BeforeAndAfterAll {
     // containing-file bytes recorded and positive, file paths committed
     assert(TileLineage.lineage(spark, dir).filter($"file_bytes" <= 0).count() === 0)
     assert(TileLineage.lineage(spark, dir).filter($"file".isNull).count() === 0)
+  }
+
+  test("a kill during the manifest append leaves an empty log: every tile is rewritten") {
+    val dir = freshDir()
+    // what a job killed before its commit leaves behind: no committed file
+    assert(new java.io.File(dir, s"${TileLineage.LineageDir}/_temporary/0").mkdirs())
+    val s1 = TileLineage.runResumable(spark, input, dir)
+    assert(s1 === RunStats(7, 0, 7, 1000), s1)
+    assert(TileLineage.readTable(spark, dir).count() === 1000)
+  }
+
+  test("a tile split across files counts once; its rows sum over its records") {
+    import spark.implicits._
+    val dir = freshDir()
+    val small = input.filter($"id" < 100)
+    spark.conf.set("spark.sql.files.maxRecordsPerFile", "5")
+    try {
+      val s1 = TileLineage.runResumable(spark, small, dir)
+      assert(s1 === RunStats(7, 0, 7, 100), s1)
+      // more records than tiles: some tile really spans several files
+      assert(TileLineage.lineage(spark, dir).count() > 7)
+      val s2 = TileLineage.runResumable(spark, small, dir, attempt = 2)
+      assert(s2 === RunStats(7, 7, 0, 0), s2)
+      val fromLineage = TileLineage.lineage(spark, dir)
+        .groupBy($"tile_id").agg(sum($"rows").as("rows"))
+        .as[(String, Long)].collect().toMap
+      val fromData = TileLineage.readTable(spark, dir)
+        .groupBy($"tile_id").count().as[(String, Long)].collect().toMap
+      assert(fromLineage === fromData)
+      assert(fromData.values.sum === 100)
+    } finally spark.conf.unset("spark.sql.files.maxRecordsPerFile")
+  }
+
+  test("empty input on a fresh table commits nothing") {
+    import spark.implicits._
+    val dir = freshDir()
+    assert(TileLineage.runResumable(spark, input.filter($"id" < 0), dir) === RunStats(0, 0, 0, 0))
+    assert(TileLineage.readTable(spark, dir).count() === 0)
+  }
+
+  test("job plan: a fresh write takes at most 4 jobs, a no-op resume at most 3") {
+    val dir = freshDir()
+    val (s1, writeJobs) = JobCounter(spark.sparkContext)(TileLineage.runResumable(spark, input, dir))
+    assert(s1 === RunStats(7, 0, 7, 1000), s1)
+    assert(writeJobs <= 4, s"fresh write ran $writeJobs jobs")
+    val (s2, resumeJobs) = JobCounter(spark.sparkContext)(
+      TileLineage.runResumable(spark, input, dir, attempt = 2))
+    assert(s2 === RunStats(7, 7, 0, 0), s2)
+    assert(resumeJobs <= 3, s"no-op resume ran $resumeJobs jobs")
   }
 }
